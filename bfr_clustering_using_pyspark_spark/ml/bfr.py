@@ -16,12 +16,18 @@ Spark-first architecture (designed for 1000 executors / 100 TB):
   only driver-side point pool is the retained set, which is bounded
   by ``rs_max`` (overflow triggers CS compression, per the
   algorithm).
-- Per-chunk assignment is one Arrow-batched ``mapInPandas`` pass —
-  embarrassingly parallel, NumPy-vectorized Mahalanobis against all
-  summaries at once.
+- Each round is one wave of Python tasks: the chunk is coalesced
+  (narrow, no shuffle) to at most the session's default parallelism,
+  so an id-range chunk living in a few cached partitions does not pay
+  a Python-worker handoff for every empty one. The assign kernel is a
+  ``mapInArrow`` pass — features are read from the Arrow batch as one
+  (n, d) matrix, NumPy-vectorized Mahalanobis runs against all
+  summaries at once, and output batches are built from NumPy arrays
+  (no pandas on the per-point path).
 - Sufficient-statistic updates are map-side partial aggregates: each
   Arrow batch emits one row per touched cluster (n, Σx, Σx²), so the
-  driver collect is O(num_batches × k), independent of n.
+  driver collect is O(num_batches × k), independent of n. The driver
+  collects that feedback as Arrow and folds it with array operations.
 - Per-chunk assignments are appended to a parquet run directory
   (linear distributed write) instead of accumulating a lazy union of
   Python-UDF stages.
@@ -38,15 +44,17 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .local_kmeans import LocalKMeans
 
@@ -85,17 +93,15 @@ class Summaries:
 
     @classmethod
     def from_points(cls, pts: np.ndarray, labels: np.ndarray, k: int) -> "Summaries":
+        """Sum rows by label: N/Σx/Σx² of ``pts`` per label in [0, k),
+        one weighted ``bincount`` per column (rows accumulate in input
+        order, so the sums equal a per-label ``sum(axis=0)``)."""
         d = pts.shape[1]
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, d))
-        sqsums = np.zeros((k, d))
-        for c in range(k):
-            mask = labels == c
-            counts[c] = mask.sum()
-            if counts[c]:
-                sums[c] = pts[mask].sum(axis=0)
-                sqsums[c] = (pts[mask] ** 2).sum(axis=0)
-        return cls(counts, sums, sqsums)
+        cols = np.hstack([pts, pts * pts])
+        acc = np.zeros((k, 2 * d))
+        for j in range(2 * d):
+            acc[:, j] = np.bincount(labels, weights=cols[:, j], minlength=k)
+        return cls(np.bincount(labels, minlength=k), acc[:, :d], acc[:, d:])
 
     def add_partials(self, cluster: np.ndarray, n: np.ndarray, s: np.ndarray, sq: np.ndarray) -> None:
         np.add.at(self.counts, cluster, n)
@@ -124,6 +130,22 @@ def mahalanobis_to_all(pts: np.ndarray, centers: np.ndarray, stds: np.ndarray) -
         z = (pts - centers[i]) * inv[i]
         out[:, i] = np.einsum("nd,nd->n", z, z)
     return np.sqrt(out)
+
+
+def _matrix(col: pa.Array | pa.ChunkedArray, d: int) -> np.ndarray:
+    """(rows, d) float64 matrix of an Arrow ``list<double>`` column;
+    zero-copy for a single-chunk column without nulls."""
+    flat = pc.list_flatten(col)
+    if isinstance(flat, pa.ChunkedArray):
+        flat = flat.combine_chunks()
+    return flat.to_numpy().astype(np.float64, copy=False).reshape(len(col), d)
+
+
+def _lists(mat: np.ndarray) -> pa.ListArray:
+    """Arrow ``list<double>`` column with one list per row of ``mat``."""
+    n, d = mat.shape
+    offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
 
 
 @dataclass
@@ -171,137 +193,134 @@ class BFR:
     # fused-kernel row types: DS assignment, DS/CS partial sufficient
     # stats, RS point, CS membership record
     _RT_ASSIGN, _RT_P_DS, _RT_P_CS, _RT_RS, _RT_CS_MEMBER = -1, 0, 1, 2, 3
-    _FUSED_SCHEMA = (
-        "rtype int, label long, n long, sums array<double>, "
-        "sqsums array<double>, id long, features array<double>"
+    _FUSED_SCHEMA = pa.schema(
+        [
+            ("rtype", pa.int32()),
+            ("label", pa.int64()),
+            ("n", pa.int64()),
+            ("sums", pa.list_(pa.float64())),
+            ("sqsums", pa.list_(pa.float64())),
+            ("id", pa.int64()),
+            ("features", pa.list_(pa.float64())),
+        ]
     )
 
     def _assign_kernel(self, d: int):
-        """Fused mapInPandas kernel: assign each point against the
+        """Fused mapInArrow kernel: assign each point against the
         broadcast DS/CS summaries AND emit per-batch feedback in the
-        same pass — DS assignments (id, label; features dropped),
-        map-side partial N/Σ/Σ² rows, RS points (the only rows that
-        carry features back out), CS memberships. One Arrow transfer
-        per chunk instead of two."""
+        same pass. Per input batch it yields two Arrow batches:
+
+        - one row per point: DS assignments (id, label), CS
+          memberships (id, label) and RS points (id, features — the
+          only rows that carry features back out; the others hold an
+          empty list);
+        - one partial N/Σ/Σ² row per touched DS or CS cluster, summed
+          in a single pass over DS and CS labels together."""
         cfg = self.cfg
         cls = type(self)
+        schema = cls._FUSED_SCHEMA
         ds_centers, ds_stds = self.ds.centers, self.ds.stds
+        k_ds = self.ds.k
         if cfg.use_cs and self.cs is not None and self.cs.k:
             cs_centers, cs_stds = self.cs.centers, self.cs.stds
         else:
-            cs_centers = None
-            cs_stds = None
+            cs_centers = cs_stds = None
+        k_cs = 0 if cs_centers is None else len(cs_centers)
         a_ds = cfg.alpha_ds * math.sqrt(d)
+        # indexed by KIND_DS, KIND_CS, KIND_RS
+        rtype_of_kind = np.array([cls._RT_ASSIGN, cls._RT_CS_MEMBER, cls._RT_RS], dtype=np.int32)
 
-        def partial_rows(pts: np.ndarray, labels: np.ndarray, rtype: int) -> pd.DataFrame:
-            uniq = np.unique(labels)
-            return pd.DataFrame(
-                {
-                    "rtype": rtype,
-                    "label": uniq.astype(np.int64),
-                    "n": [int((labels == u).sum()) for u in uniq],
-                    "sums": [pts[labels == u].sum(axis=0).tolist() for u in uniq],
-                    "sqsums": [(pts[labels == u] ** 2).sum(axis=0).tolist() for u in uniq],
-                    "id": None,
-                    "features": None,
-                }
-            )
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                n = batch.num_rows
+                if not n:
                     continue
-                pts = np.stack(pdf["features"].to_numpy())
-                ids = pdf["id"].to_numpy()
+                pts = _matrix(batch.column("features"), d)
                 dist = mahalanobis_to_all(pts, ds_centers, ds_stds)
-                best = dist.argmin(axis=1)
-                bestd = dist[np.arange(len(pts)), best]
-                kind = np.where(bestd < a_ds, KIND_DS, KIND_RS)
-                label = np.where(kind == KIND_DS, best, -1)
-                if cs_centers is not None and (kind == KIND_RS).any():
-                    rs_mask = kind == KIND_RS
-                    cdist = mahalanobis_to_all(pts[rs_mask], cs_centers, cs_stds)
-                    cbest = cdist.argmin(axis=1)
-                    cbestd = cdist[np.arange(rs_mask.sum()), cbest]
-                    hit = cbestd < a_ds
-                    kind[rs_mask] = np.where(hit, KIND_CS, KIND_RS)
-                    label[rs_mask] = np.where(hit, cbest, -1)
+                label = dist.argmin(axis=1)
+                kind = np.where(dist[np.arange(n), label] < a_ds, KIND_DS, KIND_RS)
+                if k_cs:
+                    rs = np.flatnonzero(kind == KIND_RS)
+                    if len(rs):
+                        cdist = mahalanobis_to_all(pts[rs], cs_centers, cs_stds)
+                        cbest = cdist.argmin(axis=1)
+                        hit = cdist[np.arange(len(rs)), cbest] < a_ds
+                        kind[rs[hit]] = KIND_CS
+                        label[rs[hit]] = cbest[hit]
+                is_rs = kind == KIND_RS
+                label = np.where(is_rs, -1, label)
+                offsets = np.zeros(n + 1, dtype=np.int32)
+                np.cumsum(is_rs * d, out=offsets[1:])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(rtype_of_kind[kind]),
+                        pa.array(label),
+                        pa.nulls(n, pa.int64()),
+                        pa.nulls(n, schema.field("sums").type),
+                        pa.nulls(n, schema.field("sqsums").type),
+                        batch.column("id").cast(pa.int64()),
+                        pa.ListArray.from_arrays(pa.array(offsets), pa.array(pts[is_rs].ravel())),
+                    ],
+                    schema=schema,
+                )
 
-                out = []
-                ds_mask = kind == KIND_DS
-                if ds_mask.any():
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_ASSIGN,
-                                "label": label[ds_mask].astype(np.int64),
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[ds_mask].astype(np.int64),
-                                "features": None,
-                            }
-                        )
-                    )
-                    out.append(partial_rows(pts[ds_mask], label[ds_mask], cls._RT_P_DS))
-                cs_mask = kind == KIND_CS
-                if cs_mask.any():
-                    out.append(partial_rows(pts[cs_mask], label[cs_mask], cls._RT_P_CS))
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_CS_MEMBER,
-                                "label": label[cs_mask].astype(np.int64),
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[cs_mask].astype(np.int64),
-                                "features": None,
-                            }
-                        )
-                    )
-                rs_mask = kind == KIND_RS
-                if rs_mask.any():
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "rtype": cls._RT_RS,
-                                "label": None,
-                                "n": None,
-                                "sums": None,
-                                "sqsums": None,
-                                "id": ids[rs_mask].astype(np.int64),
-                                "features": pd.Series(list(pts[rs_mask])),
-                            }
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
+                # DS labels in [0, k_ds), CS labels shifted to [k_ds, k_ds + k_cs)
+                held = ~is_rs
+                key = label[held] + np.where(kind[held] == KIND_CS, k_ds, 0)
+                part = Summaries.from_points(pts[held], key, k_ds + k_cs)
+                touched = np.flatnonzero(part.counts)
+                m = len(touched)
+                is_cs = touched >= k_ds
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.where(is_cs, cls._RT_P_CS, cls._RT_P_DS).astype(np.int32)),
+                        pa.array(np.where(is_cs, touched - k_ds, touched)),
+                        pa.array(part.counts[touched]),
+                        _lists(part.sums[touched]),
+                        _lists(part.sqsums[touched]),
+                        pa.nulls(m, pa.int64()),
+                        pa.nulls(m, schema.field("features").type),
+                    ],
+                    schema=schema,
+                )
 
         return fn
 
-    def _apply_feedback(self, fb: pd.DataFrame) -> None:
-        """Fold one chunk's collected feedback into driver state."""
+    def _apply_feedback(self, fb: pa.Table) -> None:
+        """Fold one chunk's collected feedback into driver state. RS
+        points and CS memberships are taken in id order, so the driver
+        state does not depend on the order the tasks returned them."""
+        d = self.ds.sums.shape[1]
+        rtype = fb["rtype"].to_numpy()
 
-        def apply_partials(rows: pd.DataFrame, summaries: Summaries) -> int:
-            if not len(rows):
+        def rows(rt: int) -> pa.Table:
+            return fb.filter(pa.array(rtype == rt))
+
+        def apply_partials(part: pa.Table, summaries: Summaries) -> int:
+            if not len(part):
                 return 0
+            n = part["n"].to_numpy()
             summaries.add_partials(
-                rows["label"].to_numpy().astype(np.int64),
-                rows["n"].to_numpy().astype(np.int64),
-                np.stack(rows["sums"].to_numpy()),
-                np.stack(rows["sqsums"].to_numpy()),
+                part["label"].to_numpy(), n, _matrix(part["sums"], d), _matrix(part["sqsums"], d)
             )
-            return int(rows["n"].sum())
+            return int(n.sum())
 
-        self._n_discard_points += apply_partials(fb[fb["rtype"] == self._RT_P_DS], self.ds)
+        self._n_discard_points += apply_partials(rows(self._RT_P_DS), self.ds)
         if self.cs is not None and self.cs.k:
-            apply_partials(fb[fb["rtype"] == self._RT_P_CS], self.cs)
-            for _, row in fb[fb["rtype"] == self._RT_CS_MEMBER].iterrows():
-                self.cs_members[int(row["label"])].append(int(row["id"]))
-        rs = fb[fb["rtype"] == self._RT_RS]
+            apply_partials(rows(self._RT_P_CS), self.cs)
+            members = rows(self._RT_CS_MEMBER)
+            ids = members["id"].to_numpy()
+            labels = members["label"].to_numpy()
+            order = np.lexsort((ids, labels))
+            bounds = np.cumsum(np.bincount(labels, minlength=self.cs.k))[:-1]
+            for j, grp in enumerate(np.split(ids[order], bounds)):
+                self.cs_members[j].extend(grp.tolist())
+        rs = rows(self._RT_RS)
         if len(rs):
-            self.rs_ids.extend(rs["id"].astype(int).tolist())
-            self.rs_pts.extend(list(np.stack(rs["features"].to_numpy())))
+            ids = rs["id"].to_numpy()
+            order = np.argsort(ids, kind="stable")
+            self.rs_ids.extend(ids[order].tolist())
+            self.rs_pts.extend(list(_matrix(rs["features"], d)[order]))
 
     # ---------- driver-side (bounded) steps ----------
 
@@ -408,19 +427,13 @@ class BFR:
     def _fold_cs_into_ds(self) -> dict[int, int]:
         """Reference ``merge_into_ds`` CS part (bfr.py:348-355):
         every CS joins its nearest DS unconditionally (α→∞)."""
-        mapping: dict[int, int] = {}
         if self.cs is None or not self.cs.k:
-            return mapping
+            return {}
         dist = mahalanobis_to_all(self.cs.centers, self.ds.centers, self.ds.stds)
         best = dist.argmin(axis=1)
-        for j in range(self.cs.k):
-            ds_label = int(best[j])
-            mapping[j] = ds_label
-            self.ds.counts[ds_label] += self.cs.counts[j]
-            self.ds.sums[ds_label] += self.cs.sums[j]
-            self.ds.sqsums[ds_label] += self.cs.sqsums[j]
-            self._n_discard_points += int(self.cs.counts[j])
-        return mapping
+        self.ds.add_partials(best, self.cs.counts, self.cs.sums, self.cs.sqsums)
+        self._n_discard_points += int(self.cs.counts.sum())
+        return dict(enumerate(best.tolist()))
 
     def _record_round(self, round_id: int) -> None:
         self.round_stats.append(
@@ -649,11 +662,11 @@ class BFR:
         checkpoint/resume contract above)."""
         cfg = self.cfg
         spark = chunks[0].sparkSession
-        # an anonymous tempdir cannot be resumed (the caller can't
-        # name it), so per-round durability there is pure cost —
-        # checkpoint only when the caller provided a run_dir
+        # without a run_dir nothing can resume, so per-round
+        # durability would be pure cost: no checkpoint, no run dir
         ckpt_enabled = run_dir is not None
-        run_dir = run_dir or tempfile.mkdtemp(prefix="bfr_run_")
+        # one wave of Python tasks per round (see the module docstring)
+        width = spark.sparkContext.defaultParallelism
         if d is None:
             d = len(chunks[0].select("features").first()[0])
 
@@ -663,7 +676,7 @@ class BFR:
         driver_assignments: list[pd.DataFrame] = []
         ckpt_frames: list[DataFrame] = []  # non-resumable path only
         start_round = 0
-        if resume:
+        if resume and ckpt_enabled:
             restored = self._ckpt_load(run_dir, expect_meta=ckpt_meta)
             if restored is not None:
                 start_round, driver_assignments = restored
@@ -678,9 +691,9 @@ class BFR:
                 # init, bounded by the driver-memory cap
                 min_frac = min(1.0, 50.0 * cfg.n_clusters / chunk_n)
                 frac = min(max(cfg.init_sample_frac, min_frac), 1.0, cfg.init_sample_cap / chunk_n)
-                sample = chunk.sample(fraction=frac, seed=cfg.seed).select("id", "features").toPandas()
+                sample = chunk.sample(fraction=frac, seed=cfg.seed).select("id", "features").toArrow()
                 ids = sample["id"].to_numpy()
-                init_assign = self._init_from_sample(ids, np.stack(sample["features"].to_numpy()))
+                init_assign = self._init_from_sample(ids, _matrix(sample["features"], d))
                 driver_assignments.append(init_assign)
                 # the non-sampled remainder of chunk 0 goes through
                 # the normal assignment path (ref assign_dsrsout on
@@ -688,7 +701,12 @@ class BFR:
                 sample_ids = spark.createDataFrame(pd.DataFrame({"id": ids}))
                 chunk = chunk.join(F.broadcast(sample_ids), "id", "left_anti")
 
-            fused = chunk.mapInPandas(self._assign_kernel(d), schema=self._FUSED_SCHEMA).persist()
+            fused = (
+                chunk.select("id", "features")
+                .coalesce(width)
+                .mapInArrow(self._assign_kernel(d), schema=from_arrow_schema(self._FUSED_SCHEMA))
+                .persist()
+            )
             try:
                 asg = fused.filter(F.col("rtype") == self._RT_ASSIGN).select(
                     "id", F.col("label").alias("cluster")
@@ -699,9 +717,9 @@ class BFR:
                     # re-run of an interrupted round is idempotent
                     asg.write.mode("overwrite").parquet(f"{out_path}/round_{round_id:05d}")
                 else:
-                    # no run_dir → nothing can ever resume from the
-                    # anonymous tempdir, so per-round parquet
-                    # durability is pure committer overhead; pin the
+                    # no run_dir → nothing can ever resume, so
+                    # per-round parquet durability would be pure
+                    # committer overhead; pin the
                     # round's assignments as an eager localCheckpoint
                     # instead (executor block store, MEMORY_AND_DISK —
                     # the same per-executor footprint class as the
@@ -711,7 +729,7 @@ class BFR:
                     ckpt_frames.append(asg.localCheckpoint(eager=True))
                 # job 2: tiny driver-bound feedback collect (partials,
                 # RS points, CS memberships)
-                fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toPandas()
+                fb = fused.filter(F.col("rtype") != self._RT_ASSIGN).toArrow()
             finally:
                 fused.unpersist()
             self._apply_feedback(fb)
@@ -808,19 +826,22 @@ class BFR:
         d = centers.shape[1]
         gate = None if alpha is None else alpha * math.sqrt(d)
 
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
+        def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                pts = np.stack(pdf["features"].to_numpy())
+                pts = _matrix(batch.column("features"), d)
                 dist = mahalanobis_to_all(pts, centers, stds)
                 best = dist.argmin(axis=1)
                 if gate is not None:
                     bestd = dist[np.arange(len(pts)), best]
                     best = np.where(bestd < gate, best, -1)
-                yield pd.DataFrame({"id": pdf["id"], "cluster": best.astype(np.int64)})
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("id").cast(pa.int64()), pa.array(best.astype(np.int64))],
+                    names=["id", "cluster"],
+                )
 
-        return points.select("id", "features").mapInPandas(fn, schema="id long, cluster long")
+        return points.select("id", "features").mapInArrow(fn, schema="id long, cluster long")
 
     def save(self, path: str) -> None:
         """Persist the fitted DS summaries + config as JSON (state is
@@ -856,5 +877,5 @@ class BFR:
 
 
 def _remap(labels: np.ndarray, kept: np.ndarray) -> np.ndarray:
-    lut = {int(old): new for new, old in enumerate(kept)}
-    return np.asarray([lut[int(x)] for x in labels], dtype=np.int64)
+    """Position of each label in the sorted array ``kept``."""
+    return np.searchsorted(kept, labels).astype(np.int64)

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same
-configs (AQE, Arrow, sane shuffle partitioning) are what we'd set on
-a real cluster — only master/memory change.
+Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``, by default the
+cores this process may run on (its CPU affinity, not the machine's
+core count); the same configs (AQE, Arrow, sane shuffle partitioning)
+are what we'd set on a real cluster — only master/memory change.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "bfr_spark_engine", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     builder = (

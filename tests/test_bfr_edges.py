@@ -174,3 +174,91 @@ def test_failed_checkpoint_write_surfaces(spark, tmp_path, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="checkpoint write failed"):
         bfr.fit(to_df(spark, X, y), run_dir=str(tmp_path / "fail"))
+
+
+def test_assign_kernel_on_arrow_batch():
+    """The mapInArrow kernel, without Spark, on one hand-built batch:
+    its DS/CS partials equal ``Summaries.from_points`` of the points
+    it put in each set, RS rows carry the exact input features, and
+    every input id comes back once across the assign, CS-member and
+    RS rows."""
+    import pyarrow as pa
+
+    from bfr_clustering_using_pyspark_spark.ml.bfr import Summaries, _lists
+
+    rng = np.random.default_rng(11)
+    d = 3
+    ds_centers = np.array([[0.0, 0.0, 0.0], [20.0, 20.0, 20.0]])
+    cs_center = np.array([-20.0, 0.0, 20.0])
+
+    def blob(center, n):
+        return center + rng.normal(0, 0.5, (n, d))
+
+    bfr = BFR(BFRConfig(n_clusters=2))
+    init = np.vstack([blob(ds_centers[0], 200), blob(ds_centers[1], 200)])
+    bfr.ds = Summaries.from_points(init, np.repeat([0, 1], 200), 2)
+    bfr.cs = Summaries.from_points(blob(cs_center, 50), np.zeros(50, dtype=np.int64), 1)
+    bfr.cs_members = [[]]
+
+    # ids shuffled so no set is a contiguous id range
+    truth = np.repeat([0, 1, 2, 3], [30, 25, 15, 5])  # DS 0, DS 1, CS 0, RS
+    pts = np.vstack([
+        blob(ds_centers[0], 30), blob(ds_centers[1], 25), blob(cs_center, 15),
+        rng.uniform(500, 1000, (5, d)),
+    ])
+    perm = rng.permutation(len(pts))
+    pts, truth = pts[perm], truth[perm]
+    ids = rng.permutation(np.arange(1000, 1000 + len(pts))).astype(np.int64)
+    batch = pa.RecordBatch.from_arrays([pa.array(ids), _lists(pts)], names=["id", "features"])
+
+    out = pa.Table.from_batches(list(bfr._assign_kernel(d)(iter([batch])))).to_pandas()
+    by = {rt: out[out["rtype"] == rt] for rt in out["rtype"].unique()}
+
+    asg, member, rs = by[BFR._RT_ASSIGN], by[BFR._RT_CS_MEMBER], by[BFR._RT_RS]
+    back = np.concatenate([asg["id"], member["id"], rs["id"]])
+    assert len(back) == len(ids) and set(back) == set(ids)
+
+    pos = {int(i): p for p, i in enumerate(ids)}
+    asg_pos = np.array([pos[i] for i in asg["id"]])
+    assert (asg["label"].to_numpy() == truth[asg_pos]).all()
+    assert (truth[[pos[i] for i in member["id"]]] == 2).all()
+    rs_pos = [pos[i] for i in rs["id"]]
+    assert (truth[rs_pos] == 3).all()
+    assert np.array_equal(np.stack(rs["features"].to_numpy()), pts[rs_pos])
+
+    # the kernel sums in batch order: take each subset in that order
+    for rt, members, labels, k in (
+        (BFR._RT_P_DS, np.sort(asg_pos), truth, 2),
+        (BFR._RT_P_CS, np.sort([pos[i] for i in member["id"]]), np.zeros_like(truth), 1),
+    ):
+        want = Summaries.from_points(pts[members], labels[members], k)
+        got = by[rt].sort_values("label")
+        assert (got["label"].to_numpy() == np.arange(k)).all()
+        assert (got["n"].to_numpy() == want.counts).all()
+        assert np.array_equal(np.stack(got["sums"].to_numpy()), want.sums)
+        assert np.array_equal(np.stack(got["sqsums"].to_numpy()), want.sqsums)
+
+
+def test_fit_is_layout_invariant(spark):
+    """The same id-sorted points as 1 partition and as 16 give the
+    same (id, cluster) rows and round stats: chunks are coalesced to
+    the session's cores before the kernel, and the driver folds RS
+    points in id order whatever order the tasks return them in. At
+    n=800, k=4, 4 chunks the init sample is all of chunk 0 (frac 1),
+    which keeps the sample itself layout-free."""
+    X, y = make_blobs(n=760, k=4, d=6, outliers=40)
+    perm = np.random.default_rng(5).permutation(len(X))
+    df = to_df(spark, X[perm], y[perm])
+    layouts = {
+        1: df.coalesce(1),
+        16: df.repartitionByRange(16, "id").sortWithinPartitions("id"),
+    }
+    results = {}
+    for parts, pts in layouts.items():
+        assert pts.rdd.getNumPartitions() == parts
+        bfr = BFR(BFRConfig(n_clusters=4, n_chunks=4, rs_max=8))
+        rows = sorted(map(tuple, bfr.fit(pts).collect()))
+        results[parts] = (rows, bfr.intermediate_stats())
+    assert results[1][0] == results[16][0]
+    pd.testing.assert_frame_equal(results[1][1], results[16][1])
+    assert results[1][1]["nof_cluster_compression"].max() > 0  # the CS path ran

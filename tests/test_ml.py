@@ -71,6 +71,9 @@ class TestSummaries:
             mask = (y % 4) == c
             assert np.allclose(s.centers[c], X[mask].mean(axis=0))
             assert np.allclose(s.stds[c], X[mask].std(axis=0))
+            # the per-label loop is the reference: same order, same bits
+            assert np.array_equal(s.sums[c], X[mask].sum(axis=0))
+            assert np.array_equal(s.sqsums[c], (X[mask] ** 2).sum(axis=0))
 
     def test_mahalanobis_zero_std_dims_ignored(self):
         # reference Utils.mahalanobis_distance skips zero-std dims

@@ -16,11 +16,11 @@ from pathlib import Path
 PKG = Path(__file__).resolve().parent.parent / "bfr_clustering_using_pyspark_spark"
 
 # any driver-materialization entry point, with or without arguments
-# (.take(n), .head(n), .toLocalIterator() included — a guard that
-# only matched the no-arg spellings could be bypassed silently);
-# (?<!F) excludes the aggregate/window FUNCTIONS F.first()/F.head()
-# etc., which run on executors
-PATTERN = re.compile(r"(?<!F)\.(collect|toPandas|first|take|head|toLocalIterator)\(")
+# (.take(n), .head(n), .toLocalIterator(), .toArrow() included — a
+# guard that only matched the no-arg spellings could be bypassed
+# silently); (?<!F) excludes the aggregate/window FUNCTIONS
+# F.first()/F.head() etc., which run on executors
+PATTERN = re.compile(r"(?<!F)\.(collect|toPandas|toArrow|first|take|head|toLocalIterator)\(")
 
 # relpath -> (expected_count, justification)
 WHITELIST = {
